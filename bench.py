@@ -247,17 +247,12 @@ BENCH_NOTES = {
     "over the merged plans (r6's bench crashed on a stale import, so "
     "compare against BENCH_r05 constituent sums).",
     "_serving_pinned": "extras.q64_warm_serving_pinned_* measures the "
-    "round-7 sorted-adjacency index path. At bench scale (233k-edge "
-    "network) it is SLOWER than the plain bucketed path — the seed "
-    "collect + literal-probe overhead exceeds the scan it prunes on a "
-    "corpus this small; its win is scale-invariance (10x corpus: "
-    "1.2-1.9x vs 3.1-3.8x unpinned, SCALING.md serving section). "
-    "Round 11 (judge r10 task 6): search_subnetwork's pin_policy="
-    "'auto' now makes that choice IN CODE from the pinned frame's "
-    "memoized row count vs the measured crossover "
-    "(_PINNED_SYM_CROSSOVER_ROWS); this extra passes pin_policy="
-    "'force' because it exists to measure the index path itself. Both "
-    "paths are output-identical (equivalence-tested).",
+    "sorted-adjacency index path (pin_serving_adjacency). "
+    "search_subnetwork collects the seeds first and probes their "
+    "incident edges in one job either way; a pin only moves that probe "
+    "to a batch-pruned cached scan, so it costs no extra job and no "
+    "policy chooses it. Both paths are output-identical "
+    "(equivalence-tested).",
     "q29_content_dedup": "suite = r5 q29 (exact dedup + span/excise "
     "arms) + former q71 cluster-representative arms, incl. their "
     "inherently-eager connected-components solve (pair-join eval + "
@@ -818,7 +813,7 @@ def main() -> None:
             t0 = time.time()
             sub_nodes, _sub_edges = search_subnetwork(
                 bnodes, edges, "GENE12", token_index=btokens,
-                pinned_sym=sym, pin_policy="force",
+                pinned_sym=sym,
             )
             sub_nodes.select("fragment", "type", "searched", "degree").collect()
             pinned_samples.append(round(time.time() - t0, 3))

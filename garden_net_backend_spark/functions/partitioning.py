@@ -13,6 +13,7 @@ from __future__ import annotations
 
 import math
 import os
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame
 
@@ -53,6 +54,16 @@ def _conf_bytes(df: DataFrame, key: str, default: int) -> int:
         return max(1, _parse_bytes(df.sparkSession.conf.get(key, str(default))))
     except Exception:
         return default
+
+
+def _local_path(uri: str) -> str:
+    """The local filesystem path of a ``file:`` URI (``file:/x``,
+    ``file:///x``, ``file://localhost/x``), percent-decoded; any other
+    URI is returned unchanged."""
+    u = urlparse(uri)
+    if u.scheme != "file" or u.netloc not in ("", "localhost"):
+        return uri
+    return unquote(u.path)
 
 
 def _estimated_scan_partitions(df: DataFrame) -> "int | None":
@@ -109,13 +120,8 @@ def _estimated_scan_partitions(df: DataFrame) -> "int | None":
     )
     sizes = []
     for uri in files:
-        path = uri
-        if path.startswith("file:"):
-            path = path[len("file:"):]
-            while path.startswith("//"):  # file:///x -> /x
-                path = path[1:]
         try:
-            sizes.append(os.path.getsize(path))
+            sizes.append(os.path.getsize(_local_path(uri)))
         except OSError:
             sizes.append(mpb)  # unknown size: one full split
     total = sum(sizes) + open_cost * len(sizes)

@@ -579,19 +579,12 @@ def assign_grid_positions(
     )
 
 
-def cytoscape_elements(
+def _element_rows(
     nodes: DataFrame, edges: DataFrame, searched: DataFrame | None = None
 ) -> DataFrame:
-    """Cytoscape.js elements as one JSON string per row (reference
-    generate_cytoscape_json, network_generator_lib.R:242-275; SURVEY S10).
-
-    Output contracts preserved: ``name→id``, ``gene_names→names``, edge
-    id = ``src~dst``, ``searched`` is the STRING "true"/"false"
-    (reference network_generator_lib.R:87-88), numbers typed (the
-    reference needs a sed to unquote, backend.py:83-85 — we emit typed
-    JSON directly), never scientific notation (LongType start/end).
-    Distributed: ``df.write.text`` streams it; small graphs collect.
-    """
+    """Unordered ``(element, _ord, _key)`` rows behind
+    ``cytoscape_elements``: ``_ord`` puts nodes before edges, ``_key``
+    orders within each block."""
     n = nodes
     if searched is not None:
         n = n.join(
@@ -599,6 +592,10 @@ def cytoscape_elements(
             "fragment",
             "left",
         ).withColumn("searched", F.coalesce(F.col("searched"), F.lit("false")))
+    elif "searched" in n.columns:
+        # a flag computed upstream (search_subnetwork) keeps the field
+        # order of the joined form: searched is the last data field
+        n = n.select(*[c for c in n.columns if c != "searched"], "searched")
     else:
         n = n.withColumn("searched", F.lit("false"))
     has_pos = "x" in n.columns and "y" in n.columns
@@ -638,9 +635,27 @@ def cytoscape_elements(
         F.lit(1).alias("_ord"),
         F.concat_ws("~", F.col("src"), F.col("dst")).alias("_key"),
     )
-    # nodes before edges, deterministic within each block
+    return node_json.unionByName(edge_json)
+
+
+def cytoscape_elements(
+    nodes: DataFrame, edges: DataFrame, searched: DataFrame | None = None
+) -> DataFrame:
+    """Cytoscape.js elements as one JSON string per row (reference
+    generate_cytoscape_json, network_generator_lib.R:242-275; SURVEY S10).
+
+    Output contracts preserved: ``name→id``, ``gene_names→names``, edge
+    id = ``src~dst``, ``searched`` is the STRING "true"/"false"
+    (reference network_generator_lib.R:87-88) — from ``searched``
+    fragments when given, else from a ``searched`` column of ``nodes``
+    when present, else "false" — numbers typed (the reference needs a
+    sed to unquote, backend.py:83-85 — we emit typed JSON directly),
+    never scientific notation (LongType start/end). Nodes come before
+    edges, each block ordered by id. Distributed: ``df.write.text``
+    streams it; small graphs use ``to_cytoscape_json``.
+    """
     return (
-        node_json.unionByName(edge_json)
+        _element_rows(nodes, edges, searched)
         .orderBy("_ord", "_key")
         .select("element")
     )
@@ -651,8 +666,13 @@ def to_cytoscape_json(
 ) -> str:
     """Collected form for interactive (small) subnetworks; "{}" when the
     network is empty (reference empty-result sentinel,
-    network_generator.R:88-92; SURVEY S13)."""
-    elems = [r["element"] for r in cytoscape_elements(nodes, edges, searched).collect()]
+    network_generator.R:88-92; SURVEY S13). The rows are small, so they
+    are sorted here, in ``cytoscape_elements``' order (NULL keys first,
+    UTF-8 byte order = code point order), not by a distributed sort
+    that samples its input in an extra job."""
+    rows = _element_rows(nodes, edges, searched).collect()
+    rows.sort(key=lambda r: (r["_ord"], r["_key"] is not None, r["_key"] or ""))
+    elems = [r["element"] for r in rows]
     if not elems:
         return "{}"
     return '{"elements": [' + ",".join(elems) + "]}"

@@ -23,29 +23,45 @@ range-only). Matched nodes are flagged ``searched`` (serialized as the
 string "true"/"false" — reference network_generator_lib.R:87-88) and
 per-subnetwork degree is recomputed (Q7, reference :223-226).
 
-Serving-scale design: the reference regex-scans every vertex per query
-(network_generator_lib.R:90-129). Here a gene query probes the
-inverted token index (``build_token_index``, materialized bucketed by
-``plans/materialize``) with an equi-join; the full-table regex scan
-survives only as the fallback for search terms that contain non-word
-characters (un-tokenizable, rare). Tokens are split on non-word
-characters, so token equality is exactly the reference's
-``\\bterm\\b`` word-boundary match for word-only terms.
+Serving-scale design: resolve once, then one flat plan. A search's
+seeds and their ego sets are interactive-sized, so they are settled on
+the driver in two small jobs, and only the final subnetwork is a Spark
+plan:
+
+1. ``resolve_search_seeds`` is collected (one job for a term that
+   matches nothing, two otherwise). A gene term probes the inverted
+   token index (``build_token_index``) with an equi-join; the full-table
+   regex scan survives only for terms with non-word characters. Tokens
+   split on non-word characters, so token equality is exactly the
+   reference's ``\\bterm\\b`` match for word-only terms.
+2. One probe job collects the seeds' incident edges (a literal
+   ``IN`` filter; off ``pin_serving_adjacency`` when one is passed).
+3. The driver builds every seed's ego set and ships them back as ONE
+   membership relation, one row per hood node: ``(node, groups,
+   searched)``. Each name seed is its own ego group (union of per-seed
+   ego graphs); all range seeds share one group (induced on the union).
+   The relation travels as one JSON string literal, so a 20k-node hood
+   costs O(1) py4j calls.
+4. The plan: edges ⋈ m(src) ⋈ m(dst) kept where the two endpoints'
+   groups overlap, nodes ⋈ m, and one degree aggregate. Nothing in it
+   is recomputed per branch, and it needs no ``distinct``: the edge
+   table is simplified (one row per undirected edge), as
+   ``build_network`` writes it.
+
+On the benchmark's network a search miss runs 8 Spark jobs for a gene
+term and 11 for a range term, where the per-branch plan it replaced
+ran 52 and 139 (SCALING.md, serving section).
 """
 
 from __future__ import annotations
 
+import json
 import re
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..operators.graph import (
-    degrees,
-    ego_nodes,
-    induced_subgraph,
-    symmetrize,
-)
+from ..operators.graph import degrees, symmetrize
 from ..operators.interval import range_query
 
 _RANGE_RE = re.compile(r"^(([12]?[0-9])|([XYxy])):(\d+)(-(\d+))?$")
@@ -230,150 +246,13 @@ def _range_seeds(
     return hits.unionByName(fallback)
 
 
-def pin_serving_adjacency(
-    edges: DataFrame, partitions: int | None = None
-) -> DataFrame:
-    """Serving-side adjacency index: the symmetrized edge list
-    range-partitioned and SORTED by src, cached. Built once at ingest
-    (next to the bucketed node/token tables) so that per-request seed
-    probes with literal predicates (`src IN (seed...)`) prune cached
-    batches via their min/max stats instead of scanning the whole edge
-    table — Spark's InMemoryTableScan keeps per-batch stats, and the
-    sort makes each seed touch O(1) batches. This is the local-mode
-    analogue of the 100 TB layout: an edge table bucketed+sorted by
-    src where a seed probe reads only the matching buckets' row
-    groups, not the corpus. Pass the result to ``search_subnetwork``
-    as ``pinned_sym``."""
-    spark = edges.sparkSession
-    if partitions is None:
-        partitions = spark.sparkContext.defaultParallelism
-    sym = (
-        symmetrize(edges.select("src", "dst"))
-        .repartitionByRange(partitions, "src")
-        .sortWithinPartitions("src")
-        .persist()
-    )
-    # memoize the materialization count on the frame — the auto
-    # pin-policy in search_subnetwork reads it to pick pinned vs join
-    # without a per-request job
-    sym._pinned_sym_rows = sym.count()
-    return sym
-
-
-# literal fast path cap: above this many seeds the IN-list predicate
-# stops being a win (plan-size growth) and the join path is the right
-# plan anyway (a huge seed set ~ a batch query, not interactive)
-_SEED_LITERAL_CAP = 2048
-
-# auto pin-policy crossover, in SYMMETRIZED adjacency rows (2 per
-# edge): the serving drill measured the pinned literal-probe path
-# SLOWER than the plain AQE join path at the bench network (233k
-# edges = 466k sym rows — the seed collect + literal-probe overhead
-# exceeds the scan it prunes) and decisively faster at 10×/100×
-# (2.33M edges = 4.66M sym rows: 1.2-1.9× vs 3.1-3.8× unpinned;
-# SCALING.md serving section). 1.5M sym rows sits between the
-# measured loser and winner, biased toward the join path whose
-# worst case is mild (judge r10 task 6 — the crossover is now a
-# heuristic in code, not a deployment footnote).
-_PINNED_SYM_CROSSOVER_ROWS = 1_500_000
-
-
-def _pinned_sym_rows(pinned_sym: DataFrame) -> int:
-    """Row count of a pinned adjacency frame, memoized on the frame
-    object (``pin_serving_adjacency`` stamps it at build; a
-    caller-built frame pays one count on FIRST use — it is persisted
-    by contract, so the count is a cached-scan job, and every later
-    request reads the memo)."""
-    n = getattr(pinned_sym, "_pinned_sym_rows", None)
-    if n is None:
-        n = pinned_sym.count()
-        pinned_sym._pinned_sym_rows = n
-    return int(n)
-
-
-def _seed_adjacency(e: DataFrame, seeds: DataFrame) -> DataFrame:
-    """(s, x) pairs where x ∈ {s} ∪ N(s) — the per-seed ego node sets
-    in one frame. ONE symmetrized scan of the edge table + one dedup;
-    both the ego edge set AND the subnetwork node set derive from this
-    single frame (the same DataFrame object feeds both plan branches,
-    so the distinct's Exchange is reused instead of the 10×-corpus
-    edge table being scanned once per consumer — the round-7 serving
-    drill measured the duplicate-scan shape before this factoring)."""
-    s = seeds.select(F.col("fragment").alias("s"))
-    sym = symmetrize(e.select("src", "dst"))
-    return (
-        sym.join(F.broadcast(s), sym["src"] == F.col("s"))
-        .select("s", F.col("dst").alias("x"))
-        .union(s.select("s", F.col("s").alias("x")))
-        .distinct()
-    )
-
-
-def _seed_adjacency_pruned(sym: DataFrame, seed_list: list[str]) -> DataFrame:
-    """(s, x) seed adjacency off a ``pin_serving_adjacency`` frame:
-    the literal IN-list predicate reaches the cached scan, whose
-    per-batch min/max stats on the sorted src column skip every batch
-    holding no seed — per-request cost scales with the SEEDS' degree,
-    not the corpus. Output ≡ ``_seed_adjacency`` on the same seed set
-    (pinned by tests)."""
-    spark = sym.sparkSession
-    if not seed_list:
-        return spark.createDataFrame([], "s string, x string")
-    self_rows = spark.createDataFrame([(x,) for x in seed_list], "s string")
-    probed = sym.filter(F.col("src").isin(seed_list)).select(
-        F.col("src").alias("s"), F.col("dst").alias("x")
-    )
-    return probed.union(
-        self_rows.select("s", F.col("s").alias("x"))
-    ).distinct()
-
-
-def _per_seed_ego_edges(
-    e: DataFrame, seeds: DataFrame, adj: DataFrame | None = None
-) -> DataFrame:
-    """Union of per-seed induced ego edge sets (reference
-    make_ego_graph per matched vertex + union_graphs_with_attributes,
-    network_generator_lib.R:86,122): an edge (u,v) qualifies iff SOME
-    seed s has both u and v inside {s} ∪ N(s). Distinct from the
-    induced subgraph over the union, which would also admit edges
-    between neighbors of different seeds. Implemented as two
-    equi-joins against the seed adjacency (pass a precomputed
-    ``_seed_adjacency`` frame via ``adj`` to share it with the node-set
-    branch).
-
-    Broadcast choice is AQE-DELEGATED (judge r5 task 5): no hint is
-    attached, so the small-vs-hub decision happens at runtime from the
-    EXACT map-stage output size (spark.sql.adaptive conversion below
-    autoBroadcastJoinThreshold, local shuffle readers on conversion).
-    The previous eager ``adj.count()`` + persist guard made the same
-    choice but cost one extra Spark job per interactive search; a hub
-    seed (a super-enhancer fragment with 10^5+ contacts at 100x scale)
-    whose adjacency exceeds the threshold now simply stays on the
-    shuffle path instead of being forced through a driver broadcast —
-    pinned by tests/test_network_build.py
-    test_search_hub_seed_shuffle_fallback."""
-    if adj is None:
-        adj = _seed_adjacency(e, seeds)
-    cand = e.join(adj.withColumnRenamed("x", "src"), "src")
-    return (
-        cand.join(
-            adj.withColumnRenamed("x", "dst"), ["s", "dst"], "left_semi"
-        )
-        .select(*e.columns)
-        .distinct()
-    )
-
-
 def _classify_terms(
     search: str, ensembl2name: DataFrame | None
 ) -> list[tuple[str, str]]:
     """Split the search string and classify every term into its dispatch
     arm ('range' | 'fragment' | 'ensembl' | 'gene') — the ONE place the
     reference's regex dispatch (network_generator_lib.R:78-231) is
-    encoded. Both resolve_search_seeds (arm construction) and
-    search_subnetwork (arm-presence pruning) derive from this list, so
-    a future arm kind or regex change cannot make the two paths diverge
-    (ADVICE r5)."""
+    encoded."""
     terms = [t for t in re.split(r"[,\s\t]+", search.strip()) if t]
     out: list[tuple[str, str]] = []
     for term in terms:
@@ -436,6 +315,95 @@ def resolve_search_seeds(
     return out.distinct()
 
 
+def pin_serving_adjacency(
+    edges: DataFrame, partitions: int | None = None
+) -> DataFrame:
+    """Serving-side adjacency index: the symmetrized edge list
+    range-partitioned and SORTED by src, cached and materialized. Built
+    once at ingest; pass it to ``search_subnetwork`` as ``pinned_sym``
+    and the per-request seed probe (a literal ``src IN (seed...)``
+    filter) reads only the cached batches whose min/max stats on the
+    sorted src column can hold a seed, instead of every edge. This is
+    the local-mode analogue of an edge table bucketed and sorted by
+    src, where a seed probe reads only the matching row groups."""
+    spark = edges.sparkSession
+    if partitions is None:
+        partitions = spark.sparkContext.defaultParallelism
+    sym = (
+        symmetrize(edges.select("src", "dst"))
+        .repartitionByRange(partitions, "src")
+        .sortWithinPartitions("src")
+        .persist()
+    )
+    sym.count()
+    return sym
+
+
+def _sql_str(s: str) -> str:
+    """``s`` as a Spark SQL string literal."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def _in_list(col: str, values: list[str]) -> str:
+    return f"{col} IN ({', '.join(map(_sql_str, values))})"
+
+
+def _ego_sets(
+    e: DataFrame, seeds: list[str], pinned_sym: DataFrame | None
+) -> dict[str, set[str]]:
+    """{seed: {seed} ∪ N(seed)} from ONE collect of the seeds' incident
+    edges. The seed list travels as one SQL ``IN`` expression, so a
+    cached scan can skip batches by their src/dst stats."""
+    if pinned_sym is not None:
+        probe = pinned_sym.filter(F.expr(_in_list("src", seeds)))
+    else:
+        probe = e.filter(
+            F.expr(f"{_in_list('src', seeds)} OR {_in_list('dst', seeds)}")
+        )
+    ego = {s: {s} for s in seeds}
+    for u, v in probe.select("src", "dst").collect():
+        if u in ego:
+            ego[u].add(v)
+        if v in ego:
+            ego[v].add(u)
+    return ego
+
+
+def _membership(
+    spark, kinds: dict[str, set[str]], ego: dict[str, set[str]]
+) -> DataFrame:
+    """The hood as ``(node, groups, searched)``, one row per node,
+    shipped as ONE JSON string literal that the optimizer folds into a
+    constant array (O(1) py4j calls, never a literal per element; a
+    ``VALUES`` list of the same rows costs the SQL parser seconds at
+    35k rows). Group ``i`` is the ego set of the i-th name seed; every
+    range seed's ego set is the shared last group, so an edge whose
+    endpoints share a group is exactly an edge of the union of per-seed
+    ego graphs (name seeds) or of the induced-on-union (range seeds)."""
+    name_seeds = sorted(s for s, k in kinds.items() if "name" in k)
+    range_group = len(name_seeds)
+    groups: dict[str, list[int]] = {}
+    for g, s in enumerate(name_seeds):
+        for x in ego[s]:
+            groups.setdefault(x, []).append(g)
+    for s in (s for s, k in kinds.items() if "range" in k):
+        for x in ego[s]:
+            gs = groups.setdefault(x, [])
+            if not gs or gs[-1] != range_group:
+                gs.append(range_group)
+    rows = [
+        {"node": x, "groups": gs, "searched": x in kinds}
+        for x, gs in sorted(groups.items())
+    ]
+    m = spark.sql(
+        f"SELECT inline(from_json({_sql_str(json.dumps(rows))}, "
+        "'array<struct<node:string,groups:array<int>,searched:boolean>>'))"
+    )
+    # an empty relation, not an empty generator, lets the optimizer
+    # prune the whole plan of a no-match search to zero jobs
+    return m if rows else m.limit(0)
+
+
 def search_subnetwork(
     nodes: DataFrame,
     edges: DataFrame,
@@ -445,118 +413,49 @@ def search_subnetwork(
     nearest: bool = False,
     token_index: DataFrame | None = None,
     pinned_sym: DataFrame | None = None,
-    pin_policy: str = "auto",
 ) -> tuple[DataFrame, DataFrame]:
     """Dispatch → seeds → union of per-seed ego graphs (name terms) /
     induced-on-union (range terms) → per-subnet degree. Returns
     (sub_nodes with ``searched`` string flag and recomputed ``degree``,
-    sub_edges). Empty seeds → empty frames (the "{}" sentinel belongs
-    to the serialization layer). Pass ``token_index`` (materialized by
-    plans/materialize) to answer gene queries with an index probe
-    instead of a full-table regex scan, and ``pinned_sym``
-    (``pin_serving_adjacency``) to answer the name-seed adjacency
-    probe with a batch-pruned literal scan instead of a full edge scan
-    (serving deployments; ≤ _SEED_LITERAL_CAP seeds — above the cap
-    the AQE-delegated join path runs regardless).
+    sub_edges). Empty seeds → empty frames whose plans run no job (the
+    "{}" sentinel belongs to the serialization layer).
 
-    ``pin_policy`` (judge r10 task 6): ``"auto"`` (default) engages
-    the pinned path only when the pinned frame is large enough to win
-    — ≥ ``_PINNED_SYM_CROSSOVER_ROWS`` symmetrized rows, the measured
-    drill crossover (below it the seed collect + literal probe costs
-    more than the scan it prunes); ``"force"`` always uses a provided
-    pin (benchmarking the index path itself); ``"off"`` ignores the
-    pin. Both paths are output-identical (equivalence-tested), so the
-    policy is purely a latency choice."""
-    if pin_policy not in ("auto", "force", "off"):
-        raise ValueError(f"unknown pin_policy: {pin_policy!r}")
-    tagged = resolve_search_seeds(
+    Seeds and their ego sets are collected first (module docstring), so
+    the returned frames are one flat plan over ``nodes`` and ``edges``.
+    Pass ``token_index`` (materialized by plans/materialize) to answer
+    gene queries with an index probe instead of a full-table regex
+    scan, and ``pinned_sym`` (``pin_serving_adjacency``) to answer the
+    seed probe from a batch-pruned cached scan; both paths return the
+    same frames."""
+    kinds: dict[str, set[str]] = {}
+    for r in resolve_search_seeds(
         nodes,
         search,
         ensembl2name=ensembl2name,
         expand=expand,
         nearest=nearest,
         token_index=token_index,
-    )
-    name_frames = [tagged.filter(F.col("kind") == "name").select("fragment")]
-    range_frames = [tagged.filter(F.col("kind") == "range").select("fragment")]
-    # prune empty arms without a job — arm presence derives from the
-    # SAME classification resolve_search_seeds dispatched on (ADVICE
-    # r5: a re-run regex split here could silently diverge from the
-    # dispatch if an arm kind were added)
-    arms = {arm for _t, arm in _classify_terms(search, ensembl2name)}
-    has_range = "range" in arms
-    has_name = bool(arms - {"range"})
-    if not has_range:
-        range_frames = []
-    if not has_name:
-        name_frames = []
-
-    def _union(frames: list[DataFrame]) -> DataFrame:
-        out = frames[0]
-        for f in frames[1:]:
-            out = out.union(f)
-        return out.distinct()
-
-    seeds = tagged.select("fragment").distinct()
-
+    ).collect():
+        kinds.setdefault(r["fragment"], set()).add(r["kind"])
     e = edges.select("src", "dst", "type")
-    # the subnetwork node set (hood) and the ego edge set both derive
-    # from ONE _seed_adjacency frame per arm — ego_nodes(e, A ∪ B) ≡
-    # ∪ per-arm (arm ∪ N(arm)), and sharing the frame lets Spark reuse
-    # the adjacency Exchange instead of re-scanning the edge table for
-    # each consumer (2 full scans saved per request at 10× corpus)
-    hood_parts: list[DataFrame] = []
-    edge_parts: list[DataFrame] = []
-    if name_frames:
-        nseeds = _union(name_frames)
-        adj = None
-        use_pin = pinned_sym is not None and pin_policy != "off" and (
-            pin_policy == "force"
-            or _pinned_sym_rows(pinned_sym) >= _PINNED_SYM_CROSSOVER_ROWS
-        )
-        if use_pin:
-            # serving fast path: collect the (interactive-small) seed
-            # set and probe the sorted pinned adjacency with literals —
-            # one tiny job on the bucketed token index buys batch-
-            # pruned scans for the whole downstream ego plan
-            rows = nseeds.limit(_SEED_LITERAL_CAP + 1).collect()
-            if len(rows) <= _SEED_LITERAL_CAP:
-                adj = _seed_adjacency_pruned(
-                    pinned_sym, [r["fragment"] for r in rows]
-                )
-        if adj is None:
-            adj = _seed_adjacency(e, nseeds)
-        hood_parts.append(adj.select(F.col("x").alias("node")))
-        edge_parts.append(_per_seed_ego_edges(e, None, adj=adj))
-    if range_frames:
-        rhood = ego_nodes(
-            e, _union(range_frames).withColumnRenamed("fragment", "node")
-        )
-        hood_parts.append(rhood)
-        edge_parts.append(induced_subgraph(e, rhood))
-    # NOTE: no .distinct() on hood — its only consumer is the left_semi
-    # membership join below, which is duplicate-insensitive, so a dedup
-    # here is one pure extra Exchange+HashAggregate per interactive
-    # search (the ego_nodes/adj branches already produce set-like but
-    # possibly overlapping node lists)
-    hood = hood_parts[0]
-    for p in hood_parts[1:]:
-        hood = hood.union(p)
-    sub_edges = edge_parts[0]
-    for p in edge_parts[1:]:
-        sub_edges = sub_edges.union(p).distinct()
-    sub_nodes = nodes.join(
-        hood.withColumnRenamed("node", "fragment"), "fragment", "left_semi"
+    ego = _ego_sets(e, sorted(kinds), pinned_sym) if kinds else {}
+    m = _membership(nodes.sparkSession, kinds, ego)
+    end = {
+        c: m.select(F.col("node").alias(c), F.col("groups").alias(f"_g{c}"))
+        for c in ("src", "dst")
+    }
+    sub_edges = (
+        e.join(end["src"], "src")
+        .join(end["dst"], "dst")
+        .filter(F.arrays_overlap("_gsrc", "_gdst"))
+        .select("src", "dst", "type")
     )
-    # searched flag (string contract) + per-subnetwork degree (Q7)
-    sub_nodes = (
-        sub_nodes.join(
-            seeds.withColumn("searched", F.lit("true")), "fragment", "left"
-        )
-        .withColumn("searched", F.coalesce(F.col("searched"), F.lit("false")))
-        .drop("degree")
+    flag = F.when(F.col("searched"), "true").otherwise("false")
+    sub_nodes = nodes.drop("degree").join(
+        m.select(F.col("node").alias("fragment"), flag.alias("searched")),
+        "fragment",
     )
-    deg = degrees(sub_edges.select("src", "dst"))
+    deg = degrees(sub_edges)
     sub_nodes = (
         sub_nodes.join(deg, sub_nodes["fragment"] == deg["node"], "left")
         .drop("node")

@@ -110,16 +110,18 @@ def serve_search(
     ensembl2name: DataFrame | None = None,
     token_index: DataFrame | None = None,
     pinned_sym: DataFrame | None = None,
-    pin_policy: str = "auto",
 ) -> tuple[str, bool]:
     """One HTTP search request, memoized: (cytoscape JSON, was_hit).
 
-    Miss path = search_subnetwork (token-index probe; pass
+    A hit reads one cache file and runs no Spark job. A miss runs
+    search_subnetwork (seeds and ego sets collected first, then one flat
+    plan; plans/search) and serializes its frames with their own
+    ``searched`` column, sorted on the driver: 8 Spark jobs for a gene
+    term, 11 for a range term, 1 for a term that matches nothing. Pass
     ``pinned_sym`` from plans.search.pin_serving_adjacency for
-    batch-pruned seed probes) → cytoscape serialization → cache put.
-    The "{}" empty-result sentinel is cached too, exactly as the
-    reference caches its 3-byte output before the 404 check
-    (backend.py:94-103)."""
+    batch-pruned seed probes. The "{}" empty-result sentinel is cached
+    too, exactly as the reference caches its 3-byte output before the
+    404 check (backend.py:94-103)."""
     from .network_build import to_cytoscape_json
     from .search import search_subnetwork
 
@@ -136,11 +138,7 @@ def serve_search(
         nearest=nearest,
         token_index=token_index,
         pinned_sym=pinned_sym,
-        pin_policy=pin_policy,
     )
-    from pyspark.sql import functions as F
-
-    seeds = sub_nodes.filter(F.col("searched") == "true").select("fragment")
-    result = to_cytoscape_json(sub_nodes.drop("searched"), sub_edges, searched=seeds)
+    result = to_cytoscape_json(sub_nodes, sub_edges)
     cache.put(key, result)
     return result, False

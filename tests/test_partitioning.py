@@ -5,6 +5,7 @@ planning pass (judge r13 "what's wrong" #4 / next-round task 8)."""
 
 from garden_net_backend_spark.functions.partitioning import (
     _estimated_scan_partitions,
+    _local_path,
     _parse_bytes,
     ensure_min_partitions,
 )
@@ -18,6 +19,26 @@ def test_parse_bytes_units():
     assert _parse_bytes("128MB") == 128 * 1024 * 1024
     assert _parse_bytes("1g") == 1 << 30
     assert _parse_bytes("4194304b") == 4 * 1024 * 1024
+
+
+def test_local_path_decodes_file_uris():
+    assert _local_path("file:/data/a%20b/x.parquet") == "/data/a b/x.parquet"
+    assert _local_path("file:///data/x.parquet") == "/data/x.parquet"
+    assert _local_path("file://localhost/data/a%20b/x.parquet") == "/data/a b/x.parquet"
+    # a remote host or another scheme is not a local path
+    assert _local_path("file://node7/data/x.parquet") == "file://node7/data/x.parquet"
+    assert _local_path("hdfs://nn/data/x.parquet") == "hdfs://nn/data/x.parquet"
+
+
+def test_estimate_reads_sizes_under_a_space_in_the_path(spark, tmp_path):
+    """inputFiles() percent-encodes a space; the estimate must still
+    read the real file sizes (an unreadable size counts as one full
+    split per file and would hide an under-partitioned scan)."""
+    d = str(tmp_path / "with space" / "docs")
+    spark.read.parquet(f"{SF_SMALL}/documents.parquet").write.parquet(d)
+    df = spark.read.parquet(d)
+    assert any("%20" in f for f in df.inputFiles())
+    assert _estimated_scan_partitions(df) == df.rdd.getNumPartitions()
 
 
 def test_small_scan_estimate_matches_rdd_and_repartitions(spark):

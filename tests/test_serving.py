@@ -90,6 +90,56 @@ def test_empty_sentinel_cached(spark):
     assert out2 == "{}" and hit2
 
 
+def _jobs_of(spark, group, fn):
+    """Run ``fn`` under a job group; its Spark job count, read from the
+    in-process status store once the listener bus has drained."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_serve_search_job_budget(spark, tmp_path):
+    """A miss collects its seeds and their ego sets first and then runs
+    one flat plan: its Spark job count stays within a fixed budget
+    (the deep per-branch plan it replaced ran about 50 per gene term
+    and 140 per range term). A hit runs none."""
+    from garden_net_backend_spark.plans.materialize import (
+        load_serving_session,
+        write_network,
+    )
+
+    nodes, edges = _network(spark)
+    write_network(nodes, edges, str(tmp_path / "served"))
+    t = load_serving_session(spark, str(tmp_path / "served"))
+    for df in t.values():
+        df.count()
+    cache = ResultCache(str(tmp_path / "cache"))
+    budget = [
+        ("Gene12", 12),                # gene
+        ("Gene13, Gene22", 12),        # multi-term
+        ("1:1000-2600", 16),           # range
+        ("NoSuchGeneXYZ", 2),          # no match
+        ("Gene12", 0),                 # cache hit
+    ]
+    try:
+        for i, (term, limit) in enumerate(budget):
+            (out, hit), jobs = _jobs_of(
+                spark, f"budget-{i}",
+                lambda: serve_search(cache, t["nodes"], t["edges"], term,
+                                     token_index=t["token_index"]),
+            )
+            assert hit == (limit == 0) and (out == "{}") == (term == "NoSuchGeneXYZ")
+            assert jobs <= limit, (term, jobs)
+    finally:
+        for df in t.values():
+            df.unpersist()
+
+
 def test_serving_drill_scale_network_axes(spark):
     """tools/serving_drill._scale_network underpins the SCALING.md
     serving ratios — pin its two axes: N disjoint fragment-key copies

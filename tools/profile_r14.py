@@ -1,9 +1,9 @@
-"""Round-13 optimization harness: standalone per-query wall samples
+"""Round-14 optimization harness: standalone per-query wall samples
 (noop sink — guide §1.4) + formatted-plan capture.
 
 Usage:
-    python tools/profile_r13.py plans [query ...]     # capture explain("formatted") -> plans/r13/<q>_<tag>.txt
-    python tools/profile_r13.py time  [query ...]     # N standalone noop-sink samples per query
+    python tools/profile_r14.py plans [query ...]     # capture explain("formatted") -> plans/r14/<q>_<tag>.txt
+    python tools/profile_r14.py time  [query ...]     # N standalone noop-sink samples per query
 Env:
     SPARK_GRAFT_SF_DIR   data dir (default /root/testdata/sf0.1)
     R14_TAG              plan-file suffix (default "before")
@@ -35,7 +35,7 @@ OUT_DIR = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__)
 def main() -> None:
     mode = sys.argv[1] if len(sys.argv) > 1 else "time"
     names = sys.argv[2:] or list(CATALOG)
-    spark = get_session("profile_r13")
+    spark = get_session("profile_r14")
     # warm JVM + python worker pool once (bench.py discipline)
     CATALOG["q01_pricing_summary"].spark_fn(spark, SF_DIR).collect()
     spark.range(0, 1 << 15, 1, spark.sparkContext.defaultParallelism).mapInPandas(
@@ -58,7 +58,7 @@ def main() -> None:
     for name in names:
         samples = []
         for _ in range(N):
-            spark.sparkContext.setJobDescription(f"r13 profile: {name}")
+            spark.sparkContext.setJobDescription(f"r14 profile: {name}")
             t0 = time.time()
             df = CATALOG[name].spark_fn(spark, SF_DIR)
             df.write.format("noop").mode("overwrite").save()

@@ -2,9 +2,9 @@
 time the WARM interactive search path — bucketed node/token tables,
 pinned edges — at bench scale (sf0.1) and at the ~10x synthetic
 scale-up, plus the full memoized serve_search miss/hit path
-(plans/serving.py). The r6 change under test: per-seed ego broadcast
-choice is AQE-delegated (plans/search.py) — this drill proves the
-delegated plan holds its ~1s-class warm latency at 10x.
+(plans/serving.py). A search collects its seeds and their ego sets
+first and then runs one flat plan (plans/search.py); this drill shows
+how that plan's warm latency holds at 10x.
 
 Usage: python tools/serving_drill.py [sf_dir] [factor]
 Defaults: /root/testdata/sf0.1 10
@@ -143,7 +143,8 @@ def drill_scale(
     rec["edges"] = edges.count()
     rec["nodes"] = bnodes.count()
     # serving adjacency index (sorted+cached symmetrized edges): built
-    # once at ingest, buys batch-pruned literal seed probes per request
+    # once at ingest, answers the per-request seed probe from a
+    # batch-pruned cached scan
     sym = pin_serving_adjacency(edges)
     rec["build_sec"] = round(time.time() - t0, 2)
 
@@ -156,9 +157,6 @@ def drill_scale(
         t0 = time.time()
         sub_nodes, _sub_edges = search_subnetwork(
             bnodes, edges, term, token_index=btokens, pinned_sym=sym,
-            pin_policy="force",  # the drill MEASURES the pinned path at
-            # every scale; auto would route the small baseline to the
-            # join path and the ratios would compare different plans
         )
         sub_nodes.select("fragment", "type", "searched", "degree").collect()
         warm.append(round(time.time() - t0, 3))
@@ -174,8 +172,7 @@ def drill_scale(
         _wait_quiet()
         t0 = time.time()
         _result, was_hit = serve_search(
-            cache, bnodes, edges, term, token_index=btokens, pinned_sym=sym,
-            pin_policy="force"
+            cache, bnodes, edges, term, token_index=btokens, pinned_sym=sym
         )
         assert not was_hit
         miss.append(round(time.time() - t0, 3))
